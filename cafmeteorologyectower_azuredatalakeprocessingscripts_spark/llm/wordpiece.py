@@ -110,8 +110,8 @@ def _top_scored_pair(words: DataFrame) -> tuple[str, str, int] | None:
                 F.transform(
                     F.sequence(F.lit(0), F.size("syms") - 2),
                     lambda i: F.struct(
-                        F.col("syms").getItem(i).alias("left"),
-                        F.col("syms").getItem(i + 1).alias("right"),
+                        F.col("syms")[i].alias("left"),
+                        F.col("syms")[i + 1].alias("right"),
                     ),
                 )
             ).alias("p"),

@@ -105,15 +105,25 @@ def run_tower_jobs(
     configs: Iterable[SiteConfig],
     raw_glob_for: "callable",
     out_path: str,
-    tables: Sequence[str] = ("Flux", "Met"),
+    tables: Sequence[str],
     **kwargs,
 ) -> dict[tuple[str, str], DataFrame]:
     """The reference driver loop (src/LTARCAFTowerReport.py:54-86):
-    every (table, site) job against one partitioned output root.
-    ``raw_glob_for(cfg, table)`` supplies each job's input glob. Site
+    every site's job for one table against one partitioned output
+    root. ``raw_glob_for(cfg, table)`` supplies each job's input glob. Site
     failures don't abort the loop (the reference prints and continues,
     src/TowerReportPlots.py:30-37); errors are returned under the
-    ``(site, table)`` key as the exception object."""
+    ``(site, table)`` key as the exception object.
+
+    ``tables`` must name ONE table: the root is partitioned by
+    ``(site, wateryear)`` only, so a second table's dynamic overwrite
+    would delete the first table's rows. Give each table its own
+    ``out_path``."""
+    if len(tables) > 1:
+        raise ValueError(
+            f"run_tower_jobs writes one table per out_path; got {list(tables)} "
+            "(a second table's overwrite would delete the first's partitions)"
+        )
     results: dict[tuple[str, str], DataFrame] = {}
     for table in tables:
         for cfg in configs:

@@ -119,6 +119,30 @@ def test_run_tower_jobs_tolerates_site_failure(spark, tmp_path, rawdir):
     assert isinstance(results[("BoydNorth", "Flux")], Exception)
 
 
+def test_run_tower_jobs_rejects_tables_sharing_one_root(spark, tmp_path, rawdir):
+    """The output root is partitioned by (site, wateryear) only, so a
+    second table's dynamic overwrite would delete the first table's
+    rows: several tables raise before any job runs, one table writes
+    as before."""
+    cfg = SiteConfig(site="CookEast")
+    out_path = str(tmp_path / "out")
+
+    def glob_for(cfg, table):
+        return f"{rawdir}/{cfg.site}_{table}_*.dat"
+
+    window = dict(start_date=dt.date(2022, 1, 1), end_date=dt.date(2022, 1, 31))
+    with pytest.raises(ValueError, match="one table per out_path"):
+        run_tower_jobs(spark, [cfg], glob_for, out_path, tables=("Flux", "Met"), **window)
+    assert not os.path.exists(out_path)
+
+    results = run_tower_jobs(spark, [cfg], glob_for, out_path, tables=("Flux",), **window)
+    assert results[("CookEast", "Flux")].count() == 2 * 48 + 1
+    back = spark.read.parquet(out_path)
+    assert back.filter(
+        (F.col("site") == "CookEast") & (F.col("wateryear") == 2022)
+    ).count() == 2 * 48 + 1
+
+
 def test_run_tower_job_on_fake_lake_layout(spark, tmp_path):
     """file://-backed fake of the ADLS month-partitioned layout: the SAME
     month_globs the job would aim at abfss:// (via config.abfss_url),

@@ -120,8 +120,8 @@ def test_bpe_fused_pair_count_identical_to_jvm_explode(spark):
                 F.transform(
                     F.sequence(F.lit(0), F.size("syms") - 2),
                     lambda i: F.struct(
-                        F.col("syms").getItem(i).alias("left"),
-                        F.col("syms").getItem(i + 1).alias("right"),
+                        F.col("syms")[i].alias("left"),
+                        F.col("syms")[i + 1].alias("right"),
                     ),
                 )
             ).alias("p"),

@@ -1,17 +1,11 @@
-"""r17 adjudication of the driver's r16 post-close bench flags
-(VERDICT r16 #2): flagship_partitioned read 1.57x and
-embed_cosine_topk 1.38x their frozen BASELINE_RATIO ratios in the
-driver's r16 bench — untouched code, byte-identical plans, on a run
-whose own control (pricing_summary) drifted 1.39x, so almost
-certainly environmental; the standing rule says flags past 1.35x get
-an interleaved code-identical control before being dismissed.
-Neither query was touched by any r16/r17 commit, so the current tree
-is the old-code control.
+"""Interleaved ratio test for bench flags: is a query's probe ratio
+really elevated against its frozen BASELINE_RATIO.json value, or is
+the flag host variance?
 
-Method — the r15-amended design (ADJUDICATE_r15_close.json finding:
-wide interleaves measure COLD-START, not steady-state):
+Method (ADJUDICATE_r15_close.json finding: wide interleaves measure
+cold start, not steady state, so keep the interleave narrow):
 1. narrow interleave, <=4 query legs: N_ROUNDS rounds of
-   [probe, q1..q4] in one process at sf0.1, min basis;
+   [probe, q1..qn] in one process, min basis;
 2. warm-consecutive control: per query, N_WARM back-to-back reps
    AFTER the interleave (same process, caches cleared between reps),
    min basis against the SAME probe minimum.
@@ -19,12 +13,13 @@ Verdict: in-band if EITHER control's min(q)/min(probe) is within
 TOL x frozen (the r15 precedent: dedup_ngram_jaccard / sessionize
 read 1.8x interleaved but 1.09/1.06 warm).
 
-ADVICE r15 #3: frozen ratios load from BASELINE_RATIO.json at
-runtime — no hand-copied literals to go stale on a re-freeze; the
-flagged names are asserted to exist there.
+Frozen ratios load from BASELINE_RATIO.json at runtime; every named
+query must exist there. An old-vs-new A/B is this tool run once in
+each checkout.
 
-Usage: PYTHONPATH=/root/repo python tools/adjudicate_r17.py
-Writes /tmp/adjudicate_r17.json; copy to ADJUDICATE_r17.json.
+Usage: python tools/adjudicate.py <out.json> <query>...
+Env: N_ROUNDS (default 6), N_WARM (default 4), SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data, as bench.py).
 """
 
 from __future__ import annotations
@@ -34,40 +29,35 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import get_spark
+from tools.drift import py_probe
 
 PROBE = "pricing_summary"
 TOL = 1.35
 N_ROUNDS = int(os.environ.get("N_ROUNDS", "6"))
 N_WARM = int(os.environ.get("N_WARM", "4"))
 
-# which driver record flagged each query, for provenance only — the
-# frozen ratios themselves come from BASELINE_RATIO.json at runtime
-FLAGGED_ON = {
-    "flagship_partitioned": "BENCH_r16 1.57x vs frozen",
-    "embed_cosine_topk": "BENCH_r16 1.38x vs frozen",
-}
 
-
-def load_frozen() -> dict[str, float]:
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "BASELINE_RATIO.json",
-    )
-    d = json.load(open(path))
+def load_frozen(names: list[str]) -> dict[str, float]:
+    with open(os.path.join(ROOT, "BASELINE_RATIO.json")) as f:
+        d = json.load(f)
     table = {**d["ratio_to_probe"], **d["extra_ratio_to_probe"]}
-    missing = [n for n in FLAGGED_ON if n not in table]
-    assert not missing, f"flagged names not in BASELINE_RATIO.json: {missing}"
-    return {n: float(table[n]) for n in FLAGGED_ON}
+    missing = [n for n in names if n not in table]
+    assert not missing, f"names not in BASELINE_RATIO.json: {missing}"
+    return {n: float(table[n]) for n in names}
 
 
 def main() -> None:
-    frozen = load_frozen()
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_path, names = sys.argv[1], sys.argv[2:]
+    frozen = load_frozen(names)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("caf-adjudicate-r17")
+    spark = get_spark("caf-adjudicate")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
@@ -85,9 +75,6 @@ def main() -> None:
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 
-    from tools.drift import py_probe
-
-    names = list(FLAGGED_ON)
     inter: dict[str, list[float]] = {PROBE: [], **{n: [] for n in names}}
     py_probes: list[float] = []
     for r in range(N_ROUNDS):
@@ -113,12 +100,9 @@ def main() -> None:
     probe_min = min(min(inter[PROBE]), min(warm_probe))
     out: dict = {
         "_provenance": (
-            "r17 adjudication of the driver's r16 post-close flags "
-            "(flagship_partitioned 1.57x / embed_cosine_topk 1.38x vs "
-            f"frozen; see module docstring). Narrow interleave x {N_ROUNDS} "
-            f"(2 query legs) + {N_WARM} warm-consecutive reps per query at "
-            "sf0.1, min basis; both legs code-identical to their frozen "
-            "round, so this run is the old-code control."
+            f"Narrow interleave x {N_ROUNDS} ({len(names)} query legs) + "
+            f"{N_WARM} warm-consecutive reps per query at {sf_dir}, "
+            "min basis, against frozen BASELINE_RATIO.json ratios."
         ),
         "probe_min": round(probe_min, 3),
         "probe_rounds": [round(x, 3) for x in inter[PROBE]],
@@ -141,7 +125,6 @@ def main() -> None:
             "ratio_interleaved": round(ratio_i, 3),
             "ratio_warm": round(ratio_w, 3),
             "frozen": frozen[n],
-            "flagged_on": FLAGGED_ON[n],
             "rel_interleaved": round(rel_i, 2),
             "rel_warm": round(rel_w, 2),
             "verdict": "in-band (flag = host variance)"
@@ -151,7 +134,7 @@ def main() -> None:
         print(json.dumps({n: out["queries"][n]}), flush=True)
     out["n_elevated"] = n_elevated
 
-    with open("/tmp/adjudicate_r17.json", "w") as f:
+    with open(out_path, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
 

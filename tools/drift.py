@@ -80,8 +80,9 @@ def bracket_fields(sec: float, bracket: list[float]) -> dict:
 # adjudication showed host steal does NOT degrade CPython and the JVM
 # 1:1 (Python-stage queries ran 1.4-1.7x their JVM-probe prediction
 # under load 6-13 with zero local consumers) — so interpreter-bound
-# cells (the codec kernels, any pure-Python A/B) must bracket with an
-# interpreter-bound probe. Same zero-change rule as the Spark probe.
+# cells (the codec kernels, any pure-Python A/B) must be read against
+# an interpreter-bound probe (tools/adjudicate.py records one per
+# round). Same zero-change rule as the Spark probe.
 _PY_PROBE_ITERS = 2_000_000
 
 
@@ -102,13 +103,3 @@ def py_probe() -> float:
     assert s >= 0  # keep the loop un-eliminable and s referenced
     return round(best, 3)
 
-
-def bracketed_py(cell) -> tuple[float, list[float], object]:
-    """`bracketed` for interpreter-bound cells: py_probe brackets
-    instead of the Spark probe. Same reading rule."""
-    pre = py_probe()
-    t0 = time.perf_counter()
-    result = cell()
-    sec = round(time.perf_counter() - t0, 3)
-    post = py_probe()
-    return sec, [pre, post], result

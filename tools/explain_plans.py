@@ -1,10 +1,11 @@
-"""Dump `.explain("formatted")` for every bench query to
-plans/r16/<query>_<tag>.txt — the optimization round's before/after
-evidence files. Usage:
+"""Dump `.explain("formatted")` for bench queries to
+<out_dir>/<query>_<tag>.txt, the before/after plan evidence of an
+optimization change (e.g. `plans/r17/`). Usage:
 
-    PYTHONPATH=/root/repo python tools/dump_plans_r16.py <tag> [names...]
+    python tools/explain_plans.py <out_dir> <tag> [names...]
 
 With no names, dumps the full bench set (HEADLINE + EXTRA_QUERIES).
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.1 test data, as bench.py).
 """
 
 from __future__ import annotations
@@ -20,20 +21,15 @@ from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import g
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r16",
-    )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("caf-plans-r16")
+    spark = get_spark("caf-explain-plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
-    targets = names or (HEADLINE + EXTRA_QUERIES)
-    for name in targets:
+    for name in names or (HEADLINE + EXTRA_QUERIES):
         df = qs[name](spark, sf_dir)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"

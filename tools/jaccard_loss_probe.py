@@ -12,7 +12,7 @@ broken.
 
 Design of the natural-corpus mode (unchanged from r10, mirrors the
 simhash seeded-pair loss probe): the r9 tier synth
-(tools/tier_probe_r9.synth_docs) plants ~5.9 % mutant docs that replay
+(`synth_docs` below) plants ~5.9 % mutant docs that replay
 their id-1 neighbor with ~4 % word substitution; those (id-1, id) pairs
 are the KNOWN true near-dups.
 
@@ -57,7 +57,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -68,13 +67,119 @@ from pyspark.sql import functions as F
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.session import get_spark
 from cafmeteorologyectower_azuredatalakeprocessingscripts_spark.llm.dedup import jaccard_pairs
 from tools.drift import bracket_fields, bracketed
-from tools.tier_probe_r9 import synth_docs
 
 THRESHOLD = 0.1  # the oracle-checked operating point (__spark_entry__)
 SHINGLE_N = 3
 
 _TEMPLATE = " ".join(f"tmpl{k:02d}" for k in range(30))
 TAIL_WORDS = 10
+
+# natural corpus (the round-9 tier synth)
+VOCAB = 50_000
+# openings are SHORTER than the 16-char levenshtein prefix so blocks
+# split on the first Zipf body word (a boilerplate opening LONGER than
+# the prefix degenerates to 8 corpus-sized blocks — measured in the
+# first smoke run: every candidate pair over-cap at every tier, which
+# tests nothing). Half the docs get no opening at all (empty string):
+# their prefix is pure body, giving the fine-grained block population.
+OPENINGS = (
+    "welcome to",
+    "about us",
+    "faq on",
+    "terms of",
+    "privacy",
+    "notice",
+    "intro to",
+    "",
+    "",
+    "",
+    "",
+    "",
+    "",
+    "",
+    "",
+    "",
+)
+
+
+def synth_docs(spark, n: int):
+    """n synthetic docs: Zipf-ish body, boilerplate opening, ~5.9%
+    seeded near-dup mutants of their id-1 neighbor."""
+    opening = F.element_at(
+        F.array(*[F.lit(o) for o in OPENINGS]),
+        (
+            F.conv(F.substring(F.md5(F.concat(F.lit("open:"), F.col("seed"))), 1, 6), 16, 10).cast("bigint")
+            % 16
+            + 1
+        ).cast("int"),
+    )
+    return (
+        spark.range(n)
+        .select(
+            F.col("id").alias("doc_id"),
+            F.when((F.col("id") % 17 == 1) & (F.col("id") > 0), F.col("id") - 1)
+            .otherwise(F.col("id"))
+            .alias("seed"),
+        )
+        .select(
+            "doc_id",
+            "seed",
+            (F.col("doc_id") != F.col("seed")).alias("is_mut"),
+            (
+                F.conv(F.substring(F.md5(F.concat(F.lit("len:"), F.col("seed"))), 1, 8), 16, 10).cast("bigint")
+                % 60
+                + 60
+            ).cast("int").alias("n_words"),
+            opening.alias("op"),
+        )
+        .select(
+            "doc_id",
+            F.concat(
+                F.when(F.col("op") == "", F.lit("")).otherwise(F.concat(F.col("op"), F.lit(" "))),
+                F.array_join(
+                    F.transform(
+                        F.sequence(F.lit(1), F.col("n_words")),
+                        lambda i: F.when(
+                            F.col("is_mut")
+                            & (
+                                F.conv(
+                                    F.substring(F.md5(F.concat(F.lit("m"), F.col("doc_id"), F.lit(":"), i)), 1, 4),
+                                    16,
+                                    10,
+                                ).cast("bigint")
+                                % 25
+                                == 0
+                            ),
+                            # substituted word: doc-specific, disjoint prefix
+                            F.concat(
+                                F.lit("x"),
+                                (
+                                    F.conv(
+                                        F.substring(F.md5(F.concat(F.col("doc_id"), F.lit("#"), i)), 1, 8), 16, 10
+                                    ).cast("bigint")
+                                    % VOCAB
+                                ),
+                            ),
+                        ).otherwise(
+                            # Zipf-ish body word from the SEED stream
+                            F.concat(
+                                F.lit("w"),
+                                F.pow(
+                                    F.lit(float(VOCAB)),
+                                    F.conv(
+                                        F.substring(F.md5(F.concat(F.col("seed"), F.lit(":"), i)), 1, 12), 16, 10
+                                    ).cast("bigint")
+                                    % 1_000_000
+                                    / 1_000_000.0,
+                                ).cast("bigint"),
+                            )
+                        ),
+                    ),
+                    " ",
+                ),
+            ).alias("text"),
+        )
+    )
 
 
 def synth_control_docs(spark, n: int):
